@@ -886,7 +886,7 @@ def q_dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     # materialize the token array ONCE: inlining the tokenizer inside
     # the transform lambda re-runs the regex split per chunk (the
-    # documented per-position re-tokenize trap, dedup.py:_shingles)
+    # documented per-position re-tokenize trap, dedup.py:_gram_array)
     toked = d.df.select("doc_id", _tokens("text").alias("__tk__"))
     tk = F.col("__tk__")
     lined = toked.select(

@@ -5,9 +5,10 @@ MinHash+LSH near-dup, SimHash, n-gram Jaccard, and embedding-cosine
 near-dup, each as a composable DataFrame plan.
 
 Scale design (100 TB):
-- shingling/minhashing are *narrow* higher-order-function projections
-  (no explode, no shuffle) — each row computes its own sketch in
-  whole-stage codegen;
+- shingling is one *narrow* higher-order-function projection
+  (``_gram_array``: tokenize once, transform + slice, all whole-stage
+  codegen); minhashing adds one shuffle of the documents on id, which
+  the per-doc signature aggregate reuses;
 - LSH banding is the only widening step: explode to (band_key, id) then
   a self-equi-join per bucket — the classic shuffle-once candidate
   generation; hot buckets are bounded by band width choice and AQE skew
@@ -57,77 +58,23 @@ def _tokens(text_col) -> Column:
     return F.filter(F.split(F.trim(col), TOKENIZE), lambda x: x != F.lit(""))
 
 
-def _shingles(text_col: str, n: int) -> Column:
-    """Distinct word n-gram shingles as an array column (no shuffle).
+def _gram_array(tk: Column, n: int, per_gram=lambda g: g) -> Column:
+    """Every word n-gram of the token-array column ``tk``, in order and
+    with multiplicity, as an array — THE gram rule of this package
+    (``_positioned_gram_rows`` aside, which needs positions and drops
+    short docs). Gram i joins tokens i..i+n-1 with one space; a doc
+    shorter than n tokens yields one gram of all its tokens (and an
+    empty array the single gram "" — callers drop empty docs first).
+    ``per_gram`` maps each gram string (e.g. to its ``xxhash64``).
 
-    One-off use only: the tokenizer expression sits INSIDE the window
-    lambda, so the interpreted evaluator re-runs the regex split once
-    per window (measured ~8x slowdown on a corpus scan). Hot paths must
-    either use ``_shingle_rows`` (linear, codegen) or materialize the
-    token array as a real column first and slice that (see
-    ``textops.repetition_score``).
-    """
-    toks = _tokens(text_col)
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
+    ``tk`` must reference a MATERIALIZED token column, never the
+    tokenizer expression itself: inside the per-position lambda that
+    would re-run the regex split once per gram (O(len²) regex work,
+    measured ~10x slower on a corpus scan)."""
+    return F.transform(
+        F.sequence(F.lit(1), F.greatest(F.size(tk) - F.lit(n - 1), F.lit(1))),
+        lambda i: per_gram(F.array_join(F.slice(tk, i, n), " ")),
     )
-
-
-def _shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """(id, shingle) rows — the shuffled linear-time form.
-
-    posexplode tokens once, then build each n-gram with window ``lead``:
-    O(len) per doc, one shuffle keyed on the doc id, everything
-    codegen'd. The shuffle is the right trade when the shingles feed a
-    per-doc aggregation anyway (minhash, winnowing min) — the exchange
-    is shared. For a pure shingle *stream* with no per-doc aggregation,
-    prefer textops._ngram_rows (shuffle-free transform+slice, O(len·n)
-    for fixed small n). Either way, never reference the tokenizer
-    expression inside a per-position lambda — that re-runs the regex
-    split per window (O(len²) regex work, measured 10×; see
-    repetition_score). Shingles are emitted with multiplicity; add
-    ``.distinct()`` when set semantics are needed. Matches ``_shingles``
-    exactly, including the short-document case (len < n -> one shingle
-    of all tokens).
-    """
-    pieces = _shingle_exprs(id_col, text_col, n)
-    out = (
-        df.select(*pieces["toks"])
-        .withColumn("__len__", pieces["len"])
-        .withColumn("s", pieces["s"])  # concat_ws skips nulls
-        .filter(pieces["keep"])
-        .select(F.col(id_col), F.col("s"))
-    )
-    return out
-
-
-@lru_cache(maxsize=128)
-def _shingle_exprs(id_col: str, text_col: str, n: int):
-    """The input-independent Column trees of ``_shingle_rows``, built
-    once per shape. Every ``F.*`` call is a py4j round trip, and the
-    shingle pipeline builds dozens — ~0.25 s of pure driver time per
-    ``_band_table_df`` call (measured), paid per ingest micro-batch.
-    Expression trees are immutable and reference column NAMES, so the
-    same objects compose into any DataFrame's plan; memoizing them cuts
-    the per-call construction to the df method chain alone (guide §1.2,
-    driver-side edition)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(id_col).orderBy("p")
-    parts = [F.col("t")] + [F.lead("t", i).over(w) for i in range(1, n)]
-    return {
-        "toks": (
-            F.col(id_col),
-            F.posexplode(_tokens(text_col)).alias("p", "t"),
-        ),
-        "len": F.count(F.lit(1)).over(Window.partitionBy(id_col)),
-        "s": F.concat_ws(" ", *parts),
-        "keep": (
-            (F.col("p") <= F.col("__len__") - F.lit(n))
-            | ((F.col("p") == 0) & (F.col("__len__") < F.lit(n)))
-        ),
-    }
 
 
 def _ngram_rows(
@@ -135,14 +82,11 @@ def _ngram_rows(
 ):
     """(id, n-gram) rows with NO shuffle: tokenize once into a column,
     then ``transform`` + ``slice`` per start position — O(len·n) per doc
-    for fixed small n, all codegen, inherits the input partitioning.
-    (``_shingle_rows`` pays one shuffle for its window-``lead`` form;
-    that wins when n-gram construction must feed a per-doc aggregation
-    whose exchange it can share, but a pure shingle *stream* — the
-    corpus side of a contamination scan, or a self-join input that gets
-    re-shuffled on the shingle anyway — should stay narrow.) Matches
-    ``_shingle_rows`` semantics incl. the short-doc case (len < n ->
-    one shingle of all tokens; empty docs -> no rows). ``keep_cols``
+    for fixed small n, all codegen, inherits the input partitioning
+    (callers that need more parallelism or a per-doc aggregate
+    redistribute the documents first, see ``_minhash_signature_df``).
+    Empty docs emit no rows; a doc shorter than n tokens emits one
+    gram of all its tokens (``_gram_array``). ``keep_cols``
     carries extra per-doc columns through the explode (computed once
     per doc row, copied per gram) so a downstream per-doc aggregation
     can key on them instead of paying a join back to the doc table.
@@ -162,20 +106,14 @@ def _ngram_exprs(
     id_col: str, text_col: str, n: int, keep_cols: tuple, per_doc_distinct: bool
 ):
     """``_ngram_rows``' input-independent Column trees, built once per
-    shape (see ``_shingle_exprs`` — this builder feeds contamination,
-    span, fingerprint AND jaccard paths, so the py4j construction cost
-    was paid several times per bench pass)."""
+    shape. Every ``F.*`` call is a py4j round trip; expression trees are
+    immutable and reference column NAMES, so the same objects compose
+    into any DataFrame's plan. This builder feeds the minhash,
+    contamination and fingerprint paths, so unmemoized the construction
+    cost would be paid several times per pipeline pass."""
     keep = [F.col(c) for c in keep_cols]
     toked_cols = (F.col(id_col), *keep, _tokens(text_col).alias("__tk__"))
-    tk = F.col("__tk__")
-    grams = F.when(
-        F.size(tk) < n, F.array(F.array_join(tk, " "))
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(tk) - F.lit(n - 1), F.lit(1))),
-            lambda i: F.array_join(F.slice(tk, i, n), " "),
-        )
-    )
+    grams = _gram_array(F.col("__tk__"), n)
     if per_doc_distinct:
         grams = F.array_distinct(grams)
     return toked_cols, F.explode(grams).alias("s")
@@ -205,46 +143,28 @@ def fingerprint_dedup(table: Table, text_col: str, id_col: str) -> Table:
     return Table.from_df(out, name=f"{table.table_name}_fp_dedup")
 
 
-def minhash_signature(
-    text_col: str, n: int = 3, num_hashes: int = 8
-) -> list[Column]:
-    """MinHash sketch as pure projection columns (no shuffle).
-
-    Suitable for one-off signatures; ``_minhash_signature_df`` is the
-    high-throughput form used by the LSH pipeline (Catalyst's projection
-    collapse would otherwise re-derive the shingle array once per hash).
-    """
-    sh = _shingles(text_col, n)
-
-    def mh(i: int) -> Column:
-        # NB: close over the salt Column — extra lambda params (even
-        # defaulted) would be bound to lambda variables by Spark
-        salt = F.lit(f":{i}")
-        return F.array_min(
-            F.transform(sh, lambda s: F.md5(F.concat(s, salt)))
-        ).alias(f"mh{i}")
-
-    return [mh(i) for i in range(num_hashes)]
-
-
 def _minhash_signature_df(
     df: DataFrame, id_col: str, text_col: str, n: int, num_hashes: int
 ) -> DataFrame:
     """(id, mh0..mhk) via explode + hash-aggregate.
 
-    Exploding distinct shingles and taking ``min(md5(shingle||salt))``
-    per id keeps every expression inside whole-stage codegen, computes
-    the shingle array exactly once per row, and partially aggregates
-    map-side — one shuffle keyed on id, linear in total shingle count.
+    Exploding the shingles and taking ``min(md5(shingle||salt))`` per id
+    keeps every expression inside whole-stage codegen and computes the
+    shingle array exactly once per row. The ONE shuffle redistributes
+    the documents on id before shingling: the signature aggregate's
+    required distribution is then already satisfied (no second
+    exchange), and shingling runs at shuffle parallelism instead of
+    input parallelism (a small parquet is one split; shingling it in
+    one task measured ~20% slower ingest).
     """
-    exploded = _shingle_rows(df, id_col, text_col, n)
+    exploded = _ngram_rows(df.repartition(F.col(id_col)), id_col, text_col, n)
     # min over the multiset == min over the distinct set: no dedup needed
     return exploded.groupBy(id_col).agg(*_mh_agg_exprs(num_hashes))
 
 
 @lru_cache(maxsize=32)
 def _mh_agg_exprs(num_hashes: int) -> tuple:
-    """Memoized minhash aggregate Columns (see ``_shingle_exprs``)."""
+    """Memoized minhash aggregate Columns (see ``_ngram_exprs``)."""
     return tuple(
         F.min(F.md5(F.concat(F.col("s"), F.lit(f":{i}")))).alias(f"mh{i}")
         for i in range(num_hashes)
@@ -265,7 +185,7 @@ def _band_table_df(
 
 @lru_cache(maxsize=32)
 def _band_select_exprs(id_col: str, num_hashes: int, band_size: int) -> tuple:
-    """Memoized banding Columns (see ``_shingle_exprs``)."""
+    """Memoized banding Columns (see ``_ngram_exprs``)."""
     n_bands = num_hashes // band_size
     band_keys = F.array(
         *[
@@ -410,16 +330,15 @@ def ngram_jaccard_pairs(
     path engages. Explicit True/False overrides.
     """
     df = table.df
-    # narrow shingle form: the stream feeds distinct() (a shuffle on
-    # (id, s)) and then the self-join re-shuffles on s regardless, so
-    # _shingle_rows' window-lead exchange would be a pure extra shuffle
-    # of the whole shingle stream (measured ~1.3x end-to-end at 10x).
-    # One caveat: shingling now runs at INPUT parallelism. A small
-    # parquet (one 128 MB split) would shingle single-threaded, so when
-    # the source has fewer partitions than cores, redistribute the raw
-    # text first — that shuffles only the documents (~1/n of the
-    # shingle stream the window form shuffled) and is a no-op at real
-    # scale, where inputs already carry thousands of splits.
+    # narrow shingle form: the self-join re-shuffles on s regardless,
+    # so an id-keyed exchange of the shingle stream would be a pure
+    # extra shuffle (measured ~1.3x end-to-end at 10x). Shingling then
+    # runs at INPUT parallelism: a small parquet (one 128 MB split)
+    # would shingle single-threaded, so when the source has fewer
+    # partitions than cores, redistribute the raw text first — that
+    # shuffles only the documents (~1/n of the shingle stream) and is a
+    # no-op at real scale, where inputs already carry thousands of
+    # splits.
     src = df.select(id_col, text_col)
     target = df.sparkSession.sparkContext.defaultParallelism
     if src.rdd.getNumPartitions() < target:
@@ -443,19 +362,7 @@ def ngram_jaccard_pairs(
     toked = src.select(F.col(id_col), _tokens(text_col).alias("__tk__")).where(
         F.size("__tk__") > 0
     )
-    tk = F.col("__tk__")
-    gset = F.array_distinct(
-        F.when(
-            F.size(tk) < n, F.array(F.xxhash64(F.array_join(tk, " ")))
-        ).otherwise(
-            F.transform(
-                F.sequence(
-                    F.lit(1), F.greatest(F.size(tk) - F.lit(n - 1), F.lit(1))
-                ),
-                lambda i: F.xxhash64(F.array_join(F.slice(tk, i, n), " ")),
-            )
-        )
-    )
+    gset = F.array_distinct(_gram_array(F.col("__tk__"), n, F.xxhash64))
     with_set = toked.select(F.col(id_col), gset.alias("__gs__")).persist(
         _PAIRGEN_CACHE
     )

@@ -142,8 +142,6 @@ def _driver_pagerank(
             w[idx[node]] = 0.0 if wt is None else float(wt)
         psum = float(w.sum())
         if psum <= 0:
-            edges.unpersist()
-            nodes_raw.unpersist()
             raise ValueError(
                 "pagerank: no personalization seed with positive weight "
                 "appears in the graph"
@@ -192,8 +190,6 @@ def _driver_pagerank(
         if tol is not None and delta < tol:
             break
 
-    edges.unpersist()
-    nodes_raw.unpersist()
     node_type = nodes_raw.schema[node_out].dataType
     from pyspark.sql import types as SQLT
 
@@ -257,137 +253,140 @@ def pagerank(
     """
     if iterations < 1:
         raise ValueError("pagerank: iterations must be >= 1")
-    df = table._require_df()
-    edges = (
-        df.select(
-            F.col(src_col).alias("__src__"), F.col(dst_col).alias("__dst__")
-        )
-        .where(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
-        .persist()
-    )
-    # Node table in ONE map-combined aggregation (no distinct + no
-    # broadcast join — two shuffles and an exchange fewer than the old
-    # union/distinct/left-join shape): explode each edge into its two
-    # endpoints with a source flag; the flag-sum per node IS the
-    # out-degree, and degree 0 IS the dangling flag (guide §2.4). The
-    # degree column rides along so (a) the scalar probe below derives
-    # the total edge-row count for free, (b) the driver fast path reads
-    # per-node degrees off the collected rows, and (c) the distributed
-    # loop's out-degree side derives from this same cached frame
-    # instead of re-aggregating the edges.
-    nodes_raw = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("__src__").alias(node_out),
-                        F.lit(1).alias("__one__"),
-                    ),
-                    F.struct(
-                        F.col("__dst__").alias(node_out),
-                        F.lit(0).alias("__one__"),
-                    ),
-                )
-            ).alias("__e__")
-        )
-        .select("__e__.*")
-        .groupBy(node_out)
-        .agg(F.sum("__one__").alias("__deg__"))
-        .select(
-            node_out, (F.col("__deg__") == 0).alias("__dang__"), "__deg__"
-        )
-        .persist()
-    )
-    outdeg = nodes_raw.where(F.col("__deg__") > 0).select(
-        F.col(node_out).alias("__src__"), "__deg__"
-    )
-    # ONE fused scalar job: node count + dangling-node count + total
-    # edge-row count (sum of out-degrees) — everything both the fast
-    # path's bound check and the distributed loop's literals need
-    # (guide §1.2).
-    nrow = nodes_raw.agg(
-        F.count(F.lit(1)).alias("__n__"),
-        F.sum(F.col("__dang__").cast("int")).alias("__nd__"),
-        F.sum("__deg__").alias("__ne__"),
-    ).collect()[0]
-    n = nrow["__n__"]
-    n_dang = int(nrow["__nd__"] or 0)
-    n_edges = int(nrow["__ne__"] or 0)
-    if n == 0:
-        empty = nodes_raw.select(node_out).withColumn(
-            rank_out, F.lit(None).cast("double")
-        )
-        out = Table.from_df(
-            # materialize the empty frame before dropping the caches it
-            # was derived from, so the returned Table holds no lineage
-            # into unpersisted plans
-            empty.sparkSession.createDataFrame([], empty.schema),
-            name=f"{table.table_name}_pagerank",
-        )
-        edges.unpersist()
-        nodes_raw.unpersist()
-        out.pagerank_iterations = 0
-        return out
-
-    # Tiny-graph driver fast path (guide §2.5 scale-adaptive settings):
-    # when BOTH the node count (known from the fused agg above) and the
-    # raw edge-row count (one early-terminating limit+count over the
-    # already-cached edge frame) are bounded, the whole iteration fits
-    # comfortably in driver memory (<= ~20 MB of ids + float64 vectors)
-    # and runs in numpy — zero per-iteration Spark jobs, zero
-    # broadcast-exchange builds (the distributed loop pays ~5 scheduled
-    # jobs PER ITERATION on a tiny graph, pure overhead). Numerically
-    # this is the same damped power iteration with the same
-    # dangling-mass redistribution; float summation ORDER differs
-    # (~1e-15 relative), far below the oracle gate's 1e-6 rounding —
-    # the same reorder tolerance the distributed loop already relies on
-    # vs DuckDB. Degenerate inputs the join-based path handles
-    # implicitly (duplicate node keys in personalization/against
-    # tables) fall through to the distributed loop.
-    if n <= _DRIVER_MAX_NODES and n_edges <= _DRIVER_MAX_EDGE_ROWS:
-        fast = _driver_pagerank(
-            table, edges, nodes_raw, n, n_dang, iterations,
-            float(damping), tol, node_out, rank_out, against_ranks,
-            personalization, weight_col,
-        )
-        if fast is not None:
-            return fast
-
-    # Distributed loop. For small node counts AQE's per-stage
-    # materialization jobs (one scheduling round-trip per exchange, ~27
-    # jobs for a 3-iteration run) dominate the actual work — measured
-    # ~0.8 s of a ~3.4 s query at sf0.1. Disable AQE for the ITERATION
-    # LOOP ONLY in that regime and restore it before returning; big
-    # graphs (the 100 TB shape) keep AQE's coalescing and skew
-    # handling. The threshold is node-count-derived (data-adaptive),
-    # not a local core-count constant.
-    # The toggle is skipped whenever other jobs are in flight or another
-    # pagerank holds the lock (see _aqe_toggle_allowed) — the loop then
-    # just runs with AQE on, trading a little scheduling overhead for
-    # never perturbing concurrent queries' plans.
     _AQE_KEY = "spark.sql.adaptive.enabled"
-    small_graph = n <= 100_000
     aqe_prev = None
     aqe_locked = False
-    if small_graph:
-        aqe_locked = _AQE_TOGGLE_LOCK.acquire(blocking=False)
-        if aqe_locked and _aqe_toggle_allowed(table.spark):
-            try:
-                aqe_prev = table.spark.conf.get(_AQE_KEY)
-            except Exception:
-                aqe_prev = "true"
-            table.spark.conf.set(_AQE_KEY, "false")
-        elif aqe_locked:
-            _AQE_TOGGLE_LOCK.release()
-            aqe_locked = False
+    # every frame this call persists, released in the ONE finally below
+    # on every exit — result, fast path, or error (the per-iteration
+    # rank frames are released by the loop itself)
+    persisted: list = []
     try:
+        df = table._require_df()
+        edges = (
+            df.select(
+                F.col(src_col).alias("__src__"), F.col(dst_col).alias("__dst__")
+            )
+            .where(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
+            .persist()
+        )
+        persisted.append(edges)
+        # Node table in ONE map-combined aggregation (no distinct + no
+        # broadcast join — two shuffles and an exchange fewer than the old
+        # union/distinct/left-join shape): explode each edge into its two
+        # endpoints with a source flag; the flag-sum per node IS the
+        # out-degree, and degree 0 IS the dangling flag. The
+        # degree column rides along so (a) the scalar probe below derives
+        # the total edge-row count for free, (b) the driver fast path reads
+        # per-node degrees off the collected rows, and (c) the distributed
+        # loop's out-degree side derives from this same cached frame
+        # instead of re-aggregating the edges.
+        nodes_raw = (
+            edges.select(
+                F.explode(
+                    F.array(
+                        F.struct(
+                            F.col("__src__").alias(node_out),
+                            F.lit(1).alias("__one__"),
+                        ),
+                        F.struct(
+                            F.col("__dst__").alias(node_out),
+                            F.lit(0).alias("__one__"),
+                        ),
+                    )
+                ).alias("__e__")
+            )
+            .select("__e__.*")
+            .groupBy(node_out)
+            .agg(F.sum("__one__").alias("__deg__"))
+            .select(
+                node_out, (F.col("__deg__") == 0).alias("__dang__"), "__deg__"
+            )
+            .persist()
+        )
+        persisted.append(nodes_raw)
+        outdeg = nodes_raw.where(F.col("__deg__") > 0).select(
+            F.col(node_out).alias("__src__"), "__deg__"
+        )
+        # ONE fused scalar job: node count + dangling-node count + total
+        # edge-row count (sum of out-degrees) — everything both the fast
+        # path's bound check and the distributed loop's literals need.
+        nrow = nodes_raw.agg(
+            F.count(F.lit(1)).alias("__n__"),
+            F.sum(F.col("__dang__").cast("int")).alias("__nd__"),
+            F.sum("__deg__").alias("__ne__"),
+        ).collect()[0]
+        n = nrow["__n__"]
+        n_dang = int(nrow["__nd__"] or 0)
+        n_edges = int(nrow["__ne__"] or 0)
+        if n == 0:
+            empty = nodes_raw.select(node_out).withColumn(
+                rank_out, F.lit(None).cast("double")
+            )
+            out = Table.from_df(
+                # materialize the empty frame before dropping the caches it
+                # was derived from, so the returned Table holds no lineage
+                # into unpersisted plans
+                empty.sparkSession.createDataFrame([], empty.schema),
+                name=f"{table.table_name}_pagerank",
+            )
+            out.pagerank_iterations = 0
+            return out
+
+        # Tiny-graph driver fast path (a scale-adaptive setting):
+        # when BOTH the node count (known from the fused agg above) and the
+        # raw edge-row count (one early-terminating limit+count over the
+        # already-cached edge frame) are bounded, the whole iteration fits
+        # comfortably in driver memory (<= ~20 MB of ids + float64 vectors)
+        # and runs in numpy — zero per-iteration Spark jobs, zero
+        # broadcast-exchange builds (the distributed loop pays ~5 scheduled
+        # jobs PER ITERATION on a tiny graph, pure overhead). Numerically
+        # this is the same damped power iteration with the same
+        # dangling-mass redistribution; float summation ORDER differs
+        # (~1e-15 relative), far below the oracle gate's 1e-6 rounding —
+        # the same reorder tolerance the distributed loop already relies on
+        # vs DuckDB. Degenerate inputs the join-based path handles
+        # implicitly (duplicate node keys in personalization/against
+        # tables) fall through to the distributed loop.
+        if n <= _DRIVER_MAX_NODES and n_edges <= _DRIVER_MAX_EDGE_ROWS:
+            fast = _driver_pagerank(
+                table, edges, nodes_raw, n, n_dang, iterations,
+                float(damping), tol, node_out, rank_out, against_ranks,
+                personalization, weight_col,
+            )
+            if fast is not None:
+                return fast
+
+        # Distributed loop. For small node counts AQE's per-stage
+        # materialization jobs (one scheduling round-trip per exchange, ~27
+        # jobs for a 3-iteration run) dominate the actual work — measured
+        # ~0.8 s of a ~3.4 s query at sf0.1. Disable AQE for the ITERATION
+        # LOOP ONLY in that regime and restore it before returning; big
+        # graphs (the 100 TB shape) keep AQE's coalescing and skew
+        # handling. The threshold is node-count-derived (data-adaptive),
+        # not a local core-count constant.
+        # The toggle is skipped whenever other jobs are in flight or another
+        # pagerank holds the lock (see _aqe_toggle_allowed) — the loop then
+        # just runs with AQE on, trading a little scheduling overhead for
+        # never perturbing concurrent queries' plans.
+        small_graph = n <= 100_000
+        if small_graph:
+            aqe_locked = _AQE_TOGGLE_LOCK.acquire(blocking=False)
+            if aqe_locked and _aqe_toggle_allowed(table.spark):
+                try:
+                    aqe_prev = table.spark.conf.get(_AQE_KEY)
+                except Exception:
+                    aqe_prev = "true"
+                table.spark.conf.set(_AQE_KEY, "false")
+            elif aqe_locked:
+                _AQE_TOGGLE_LOCK.release()
+                aqe_locked = False
+
         # teleport vector p(v): uniform 1/n stays a LITERAL (no extra
         # column shuffled through every iteration — the common case pays
         # nothing for the personalization feature); a personalization
         # table attaches a normalized per-node __p__ column
         if personalization is None:
             nodes = nodes_raw
-            nodes_src = nodes_raw
             p_col = F.lit(1.0 / n)
             carry = [node_out, "__dang__"]
         else:
@@ -403,11 +402,9 @@ def pagerank(
                 "__dang__",
                 F.coalesce(F.col("__w__"), F.lit(0.0)).alias("__w__"),
             ).persist()
+            persisted.append(seeded)
             psum = seeded.agg(F.sum("__w__")).collect()[0][0] or 0.0
             if psum <= 0:
-                edges.unpersist()
-                nodes_raw.unpersist()
-                seeded.unpersist()
                 raise ValueError(
                     "pagerank: no personalization seed with positive weight "
                     "appears in the graph"
@@ -417,7 +414,6 @@ def pagerank(
                 "__dang__",
                 (F.col("__w__") / F.lit(psum)).alias("__p__"),
             )
-            nodes_src = seeded
             nodes_raw.unpersist()
             p_col = F.col("__p__")
             carry = [node_out, "__dang__", "__p__"]
@@ -427,6 +423,7 @@ def pagerank(
         # dedicated count() job here bought nothing: same total work, one
         # extra job of pure scheduling overhead — guide §1.2)
         edges_w = edges.join(outdeg, "__src__").persist()
+        persisted.append(edges_w)
         d = float(damping)
 
         if against_ranks is None:
@@ -546,16 +543,16 @@ def pagerank(
             ranks_cached = new_cached
             if tol is not None and delta is not None and delta < tol:
                 break
-        # ranks is materialized; the build-side caches can go
-        edges_w.unpersist()
-        edges.unpersist()
-        nodes_src.unpersist()
+        # ranks is materialized, so the finally may drop the build-side
+        # caches under it
         out = Table.from_df(
             ranks.select(node_out, rank_out), name=f"{table.table_name}_pagerank"
         )
         out.pagerank_iterations = steps
         return out
     finally:
+        for frame in persisted:
+            frame.unpersist()
         if aqe_prev is not None:
             table.spark.conf.set(_AQE_KEY, aqe_prev)
         if aqe_locked:

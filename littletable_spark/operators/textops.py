@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..session import small_df
 from ..table import Table
-from .dedup import _ngram_rows, _tokens
+from .dedup import _gram_array, _ngram_rows, _tokens
 
 # ------------------------------------------------------------------ #
 # model-cache hygiene (guide §5): several operators persist model /
@@ -409,7 +409,7 @@ def _lang_id_exprs(text_col: str, id_col: str):
     call (measured — more than half the query's wall time at sf0.1).
     Expression trees are immutable and reference column NAMES, so the
     same objects compose into any DataFrame's plan (same memoization as
-    dedup._shingle_exprs; guide §1.2, driver-side edition)."""
+    dedup._ngram_exprs)."""
     # lowercase token array + script counts materialized once: the
     # per-language loop references them len(LANG_MARKERS) times, which
     # would otherwise re-run the split/lower/regexp per language
@@ -770,20 +770,14 @@ def repetition_score(
     Native: total windows from the token count, distinct windows from
     the deduplicated shingle array — a pure projection, no shuffle.
     """
-    # materialize the token array ONCE: referencing the tokenizer
-    # expression inside the per-window lambda would re-run the regex
-    # split per window (O(windows x tokens) regex work — measured 10x
-    # slower); against a column reference each window is a cheap slice
+    # materialize the token array ONCE (see dedup._gram_array):
+    # against a column reference each window is a cheap slice
     toked = table.df.select(F.col(id_col), _tokens(text_col).alias("__tk__"))
     tk = F.col("__tk__")
     total = F.greatest(F.size(tk) - F.lit(n - 1), F.lit(0))
-    windows = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(tk) - F.lit(n - 1), F.lit(1))),
-        lambda i: F.array_join(F.slice(tk, i, n), " "),
-    )
-    distinct = F.when(total > 0, F.size(F.array_distinct(windows))).otherwise(
-        F.lit(0)
-    )
+    distinct = F.when(
+        total > 0, F.size(F.array_distinct(_gram_array(tk, n)))
+    ).otherwise(F.lit(0))
     frac = F.when(
         total > 0, (total - distinct).cast("double") / total.cast("double")
     ).otherwise(F.lit(0.0))

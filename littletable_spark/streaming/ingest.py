@@ -165,22 +165,6 @@ def ingest_batch(
     )
     from ..operators.textops import term_stats_table
 
-    # opt-in phase telemetry (guide §1 measure-first): one JSON line per
-    # batch with driver-side phase durations; no behavior change
-    import os as _os
-    import time as _time
-
-    _timing = _os.environ.get("SPARK_GRAFT_INGEST_TIMING") == "1"
-    _phases: dict[str, float] = {}
-    _t0 = _time.perf_counter()
-
-    def _mark(phase: str) -> None:
-        nonlocal _t0
-        if _timing:
-            now = _time.perf_counter()
-            _phases[phase] = _phases.get(phase, 0.0) + (now - _t0)
-            _t0 = now
-
     if sigs_path is not None and emb_col is None:
         raise ValueError("sigs_path requires emb_col (the embedding column)")
     if ivf_path is not None and (emb_col is None or ivf_centroids is None):
@@ -214,7 +198,6 @@ def ingest_batch(
             # a healed swap changed the asset layout under the caches
             _drop_asset_metadata(p)
     _cap_metadata_caches()
-    _mark("recover")
 
     # schema-drift guard: a plain partitioned-parquet read resolves its
     # schema from ONE footer, so a batch carrying a column (or a TYPE)
@@ -275,7 +258,6 @@ def ingest_batch(
                     "to unify the layout so plain reads see the union "
                     "schema."
                 )
-    _mark("schema_guard")
 
     def _stored(path: str) -> DataFrame | None:
         """The stored index MINUS this batch's own partition: a
@@ -402,7 +384,6 @@ def ingest_batch(
             )
             drops = drops.unionByName(cross)
         kept = cur.join(drops, on=id_col, how="left_anti")
-        _mark("pipeline_build")
         if collect_stats:
             counts["after_minhash"] = kept.count()
 
@@ -441,7 +422,6 @@ def ingest_batch(
 
         kept = kept.persist()
         try:
-            _mark("stage_counts")
             # ONE parallel action fills the survivor cache (and the band
             # cache its plan reads twice) so every asset write below is
             # a read of memory, not a re-materialization of the curation
@@ -570,14 +550,12 @@ def ingest_batch(
                 )
             from concurrent.futures import ThreadPoolExecutor
 
-            _mark("write_build")
             with ThreadPoolExecutor(
                 max_workers=min(3, len(writes))
             ) as pool:
                 futures = [pool.submit(w) for w in writes]
                 for f in futures:
                     f.result()  # propagate the first failure
-            _mark("write_pool")
             if allow_schema_drift:
                 # the write may have changed the corpus layout under
                 # the cached guard baseline — drop it, the next guarded
@@ -599,16 +577,6 @@ def ingest_batch(
     counts["dropped"] = (
         (counts["received"] - counts["appended"]) if collect_stats else -1
     )
-    if _timing:
-        import json as _json
-
-        print(
-            "INGEST_TIMING "
-            + _json.dumps(
-                {"batch_id": bid, **{k: round(v, 3) for k, v in _phases.items()}}
-            ),
-            flush=True,
-        )
     return counts
 
 

@@ -68,6 +68,41 @@ def test_minhash_matches_python_reference(docs):
     assert (0, 1) in got  # exact dup must be a candidate
 
 
+def test_minhash_signature_matches_python_model(spark):
+    """Signature level: every minhash equals min(md5(shingle:k)) over the
+    Python shingle set, for short docs (one all-token shingle),
+    repeated grams and tab/newline whitespace. Docs with no tokens
+    (empty, whitespace-only, NULL) get no signature row."""
+    from littletable_spark.operators.dedup import _minhash_signature_df
+
+    texts = {
+        0: "",
+        1: "   \t ",
+        2: None,
+        3: "solo",
+        4: "two words",
+        5: "three word doc",
+        6: "a b a b a b a b",
+        7: "x x x x x",
+        8: "  lead\tand\ntrail  space here  ",
+        9: "the cat sat on the mat the cat sat on the mat",
+    }
+    df = spark.createDataFrame(
+        list(texts.items()), "doc_id long, text string"
+    )
+    got = {
+        r["doc_id"]: [r[f"mh{k}"] for k in range(8)]
+        for r in _minhash_signature_df(df, "doc_id", "text", 3, 8).collect()
+    }
+    expect = {
+        i: [min(_md5(f"{x}:{k}") for x in _shingles(s)) for k in range(8)]
+        for i, s in texts.items()
+        if s and _tokens(s)
+    }
+    assert got == expect
+    assert set(got) == set(range(3, 10))
+
+
 def test_jaccard_matches_python_reference(docs):
     from littletable_spark.operators.dedup import ngram_jaccard_pairs
 

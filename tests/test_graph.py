@@ -250,3 +250,37 @@ def test_pagerank_distributed_loop_matches_driver_fast_path(spark, monkeypatch):
     ref = _ref_pagerank(EDGES, 4)
     for v in ref:
         assert slow_cold[v] == pytest.approx(ref[v], rel=1e-9)
+
+
+def test_pagerank_error_paths_release_every_cache(spark, monkeypatch):
+    """Every ValueError pagerank raises after it started persisting
+    (zero-weight seeds, warm-start ranks summing to zero) leaves the
+    persistent-RDD count where it was, on the driver fast path and on
+    the distributed loop."""
+    import littletable_spark.operators.graph as G
+
+    def n_persistent() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    t = Table("edges_err", spark=spark)
+    t.insert_many([{"src": u, "dst": v} for u, v in EDGES])
+    bad_seeds = Table("bad_seeds", spark=spark)
+    bad_seeds.insert_many([{"node": "a", "weight": 0.0}, {"node": "zz", "weight": 1.0}])
+    zero_ranks = Table("zero_ranks", spark=spark)
+    nodes = {u for u, _ in EDGES} | {v for _, v in EDGES}
+    zero_ranks.insert_many([{"node": v, "rank": 0.0} for v in sorted(nodes)])
+    pagerank(t, iterations=1)  # materialize anything the inputs cache lazily
+
+    def assert_released():
+        for kwargs, match in (
+            ({"personalization": bad_seeds}, "seed"),
+            ({"against_ranks": zero_ranks}, "sums to zero"),
+        ):
+            before = n_persistent()
+            with pytest.raises(ValueError, match=match):
+                pagerank(t, iterations=2, **kwargs)
+            assert n_persistent() == before, kwargs
+
+    assert_released()
+    monkeypatch.setattr(G, "_DRIVER_MAX_EDGE_ROWS", 0)
+    assert_released()

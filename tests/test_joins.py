@@ -89,6 +89,50 @@ def test_join_plus_bare_table_adopts_attr(spark):
     assert len(joined) == 1 and joined[0].w == "b"
 
 
+def _renamed(t, mapping):
+    # every column renamed, hidden order columns included unchanged
+    return Table.from_df(
+        t._require_df().toDF(*[mapping.get(c, c) for c in t._require_df().columns]),
+        name=t.table_name,
+    )
+
+
+def _rows(t):
+    return sorted(
+        (tuple(r)[: len(t.fields)] for r in t._require_df().collect()),
+        key=lambda r: tuple("" if v is None else str(v) for v in r),
+    )
+
+
+def test_join_awkward_column_names_match_plain_names(catalog_prices):
+    """Left and right column names that hold backticks or spaces, or
+    start with the right-side rename prefix (in either case), join to
+    exactly the rows of the plain-name join, for every join kind and for
+    an explicit attrlist."""
+    catalog, prices = catalog_prices
+    lmap = {
+        "sku": "s`ku", "color": "__r__color", "size": "__R__size",
+        "material": "my material",
+    }
+    rmap = {"sku": "s`ku", "unit_price": "__r__unit price", "size": "__R__size"}
+    awk_c, awk_p = _renamed(catalog, lmap), _renamed(prices, rmap)
+    for how in ("inner", "left_outer", "right_outer", "full_outer"):
+        plain = catalog.outer_join(how, prices, **{"sku": "sku"})
+        awk = awk_c.outer_join(how, awk_p, **{"s`ku": "s`ku"})
+        assert awk.fields == [{**lmap, **rmap}[f] for f in plain.fields], how
+        assert _rows(awk) == _rows(plain), how
+    plain = catalog.join(
+        prices, [(catalog, "color", "c"), (prices, "size", "sz")], sku="sku"
+    )
+    awk = awk_c.join(
+        awk_p,
+        [(awk_c, "__r__color", "c"), (awk_p, "__R__size", "sz")],
+        **{"s`ku": "s`ku"},
+    )
+    assert awk.fields == ["c", "sz"]
+    assert _rows(awk) == _rows(plain)
+
+
 def test_semi_anti(catalog_prices):
     catalog, prices = catalog_prices
     assert sorted(r.sku for r in catalog.semi_join(prices, "sku")) == ["001", "002"]

@@ -64,8 +64,9 @@ def test_sketches_are_single_shuffle(spark):
     import re
 
     plan = _plan(sig)
-    # exactly one shuffle: the doc-id exchange is shared by the shingle
-    # windows and the signature aggregation (formatted output lists each
+    # exactly one shuffle: the documents are redistributed on doc id
+    # before shingling and the signature aggregation reuses that
+    # exchange (formatted output lists each
     # node twice — count detail headers, not substring hits)
     n_exchanges = len(re.findall(r"\(\d+\) Exchange", plan))
     assert n_exchanges == 1, plan

@@ -66,11 +66,6 @@ DERIVED_UNIQUE: list[tuple[str, ...]] = [
 #: sort key, so any permutation of a tie group yields the same output
 #: multiset. Keyed by query name; value documents the reason.
 ALLOW_INTERCHANGEABLE: dict[str, str] = {
-    # _shingle_rows (dedup.py): lead() over posexplode position 'p'
-    # partitioned by doc id — p is unique within its partition by
-    # construction (posexplode emits 0..n-1 per row).
-    "dedup_minhash": "lead over posexplode position, unique per doc",
-    "dedup_clusters": "lead over posexplode position, unique per doc",
     "dedup_jaccard": (
         "prefix-filter rank over the 64-bit shingle hash — the stream "
         "is distinct per (id, s), so the sort key is unique within its "
